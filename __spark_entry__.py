@@ -4346,13 +4346,7 @@ def q_imdb_person_flavor(spark: SparkSession, sf_dir: str) -> DataFrame:
         imdb_person_tables,
     )
 
-    # cache_base: the five tables below union into ONE plan, so the
-    # parsed base persists once instead of re-running the scan + parse
-    # per branch (r7; same session-scoped persist pattern as
-    # _pair_feature_frame)
-    tables = imdb_person_tables(
-        _imdb_people_fixture(spark, sf_dir), cache_base=True
-    )
+    tables = imdb_person_tables(_imdb_people_fixture(spark, sf_dir))
     out = None
     for name in sorted(IMDB_PERSON_TABLES):
         tagged = tables[name].withColumn("person_table", F.lit(name))

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from soweego_spark import pins
 from soweego_spark.operators.dedup import md5_60
 
 TWO_60 = float(1 << 60)
@@ -98,11 +99,9 @@ def duplicated_spans(
     (boilerplate) — at web scale the hot-gram histogram is the same
     broadcast-anti shape as the band caps in dedup.py.
     """
-    # the gram frame feeds the corpus-wide count AND the join back —
-    # uncached, the scan + k-word concat + md5 per gram ran twice (r7
-    # plan audit). The rows are three fixed-width columns (~24 B/gram),
-    # far cheaper to persist than to re-hash; within-query reuse only.
-    grams = gram_occurrences(docs, k, id_col, text_col).persist()
+    # pins rule (a): the narrow gram rows feed the corpus-wide count AND
+    # the join back
+    grams = pins.persist(gram_occurrences(docs, k, id_col, text_col))
     counts = grams.groupBy("gh").agg(F.count("*").alias("c"))
     dup = counts.where(F.col("c") >= min_count)
     if max_count is not None:
@@ -187,9 +186,8 @@ def duplicated_spans_incremental(
     the same island merge. The corpus state is counts only — no corpus
     text is ever rescanned.
     """
-    # same two-consumer reuse as duplicated_spans: persist the batch's
-    # narrow gram rows instead of re-hashing them for the join back (r7)
-    grams = gram_occurrences(new_docs, k, id_col, text_col).persist()
+    # pins rule (a), as in duplicated_spans
+    grams = pins.persist(gram_occurrences(new_docs, k, id_col, text_col))
     own = grams.groupBy("gh").agg(F.count("*").alias("own_c"))
     total = (
         own.join(corpus_counts.select("gh", "c"), "gh", "left")

@@ -36,6 +36,8 @@ import hashlib
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from soweego_spark import pins
+
 DEFAULT_NUM_PERM = 64
 DEFAULT_BANDS = 16
 
@@ -252,14 +254,9 @@ def minhash_lsh_candidates(
     """
     assert num_perm % bands == 0, "num_perm must be divisible by bands"
 
-    # Deliberately NO persist here (r7, measured): this is one lazy query
-    # execution, and AQE's runtime exchange reuse already deduplicates
-    # the identical signature subtree across the hot-count and both
-    # self-join sides — persisting the band table A/B'd as a consistent
-    # ~1.3x LOSS (cache-write pass for rows exchange reuse delivers
-    # free), unlike simhash_pairs where the expensive POST-exchange
-    # 60-column aggregate re-ran per consumer and persisting its tiny
-    # output won 2x.
+    # Deliberately no pin (soweego_spark/pins.py rule): within this one
+    # query, AQE exchange reuse already shares the signature subtree
+    # across the hot count and both self-join sides.
     signed = minhash_signatures(toks, num_perm=num_perm, hash_family=hash_family)
     banded = band_keys(signed, num_perm=num_perm, bands=bands)
 
@@ -375,16 +372,13 @@ def simhash_pairs(
     Same hot-bucket cap as MinHash-LSH for skew.
     """
     n_blocks = max_hamming + 1
-    # sig is 16 bytes/doc and feeds three consumers (hot-bucket count +
-    # both self-join sides): uncached, the full scan -> token explode ->
-    # 60-column bit-sum aggregate re-ran once per consumer (r7 plan
-    # audit: 3 scans / 6 Exchanges of the signature subtree). Persisting
-    # the tiny signature frame collapses that to one pass; same
-    # within-query-only rationale as minhash_lsh_candidates.
-    sig = simhash_signatures(
+    # pins rule (b): unpinned, the 60-column bit-sum aggregate above the
+    # exchange re-ran for each of sig's three consumers (hot-bucket count
+    # + both self-join sides)
+    sig = pins.persist(simhash_signatures(
         docs, id_col=id_col, text_col=text_col, bits=bits,
         hash_family=hash_family,
-    ).persist()
+    ))
 
     # Block i covers bit range [lo_i, lo_i + width_i); widths differ by at
     # most 1 so all 64 bits are covered.
@@ -534,14 +528,12 @@ def fingerprint_neardup(
     """Near-dup candidates via shared winnowing fingerprints: explode ->
     self-join on fingerprint (df-capped for skew) -> pairs with at least
     ``min_shared`` shared fingerprints."""
-    # fp feeds the document-frequency count and both self-join sides —
-    # persist the narrow (doc_id, fingerprint) rows once instead of
-    # re-running the k-gram + window-min transform per consumer (r7;
-    # same within-query rationale as minhash_lsh_candidates)
-    fp = winnowing_fingerprints(
+    # pins rule (a): the narrow k-gram + window-min rows feed the df
+    # count and both self-join sides
+    fp = pins.persist(winnowing_fingerprints(
         docs, id_col=id_col, text_col=text_col, k=k, window=window,
         hash_family=hash_family,
-    ).persist()
+    ))
     counts = fp.groupBy("fingerprint").agg(F.count("*").alias("df"))
     hot = counts.filter(F.col("df") > max_df).select("fingerprint")
     fp = fp.join(F.broadcast(hot), "fingerprint", "left_anti")
@@ -681,23 +673,11 @@ def incremental_minhash_neardup(
             "corpus_banded without corpus_toks: the Jaccard confirm needs "
             "the corpus token arrays"
         )
-    # Within-call reuse (r7, measured fresh-JVM interleaved): the
-    # CONSERVATIVE/None paths stay fully lazy — they are one query
-    # execution, and AQE's runtime exchange reuse already deduplicates
-    # the identical signature/band subtrees there (persisting + eagerly
-    # checkpointing that path measured a 1.6x LOSS at sf0.1). EXACT mode
-    # spans several eager actions (corpus confirm, edge checkpoint, the
-    # final join), across which exchange reuse cannot apply — there the
-    # batch band table (three fixed-width columns, batch-bounded) is
-    # persisted and released before return. Token frames are never
-    # persisted: serializing wide token arrays into cache blocks costs
-    # more than recomputing them (the r3 lesson), and the corpus side
-    # must always stream (it grows forever).
-    released: list[DataFrame] = []
-
-    def _release_all() -> None:
-        for df in released:
-            df.unpersist()
+    # Pins (rule in soweego_spark/pins.py): the conservative/None paths
+    # are one lazy query and pin nothing. Exact mode spans several eager
+    # actions (rule (c)): it pins the batch band table and releases it
+    # before return. Token frames are never pinned: they are wide, and
+    # the corpus side grows forever.
 
     # corpus_toks=None — the explicit no-corpus contract (self-dedup
     # compositions, e.g. the curate near-dup stage or an ingest loop's
@@ -740,8 +720,7 @@ def incremental_minhash_neardup(
     if mode == "exact":
         # exact mode consumes new_banded from two separate eager actions
         # (the corpus probe and the in-batch edge build)
-        new_banded = new_banded.persist()
-        released.append(new_banded)
+        new_banded = pins.persist(new_banded)
     if not corpus_empty:
         cand = (
             new_banded.join(
@@ -808,13 +787,9 @@ def incremental_minhash_neardup(
     # the corpus); the in-batch graph is then resolved per connected
     # component with the ascending-id greedy pass.
     #
-    # Both id frames are consumed MULTIPLE times (corpus_dropped: two
-    # edge filters + the final union; edges: the CC loop + the component
-    # re-join) and their lineage contains the full signature/banding
-    # pipeline — localCheckpoint materializes each ONCE (they are id-only
-    # rows, tiny relative to the batch) instead of recomputing signatures
-    # per consumer (~1.5x wall measured at sf0.1). Same pinned-RDD budget
-    # as documented on _greedy_component_drops.
+    # Both id-only frames feed several eager consumers and their lineage
+    # holds the whole signature/banding pipeline, so each is checkpointed
+    # once (rule (c); ~1.5x wall at sf0.1).
     #
     # The two checkpoints are INDEPENDENT jobs (the corpus confirm and
     # the in-batch confirm both hang off the persisted new_banded /
@@ -829,14 +804,14 @@ def incremental_minhash_neardup(
         # no corpus: no unconditional drops, no edge filtering — the
         # greedy pass over the in-batch graph is the whole answer
         corpus_dropped = None
-        edges = edges_raw.localCheckpoint()
+        edges = pins.checkpoint(edges_raw)
     else:
         from concurrent.futures import ThreadPoolExecutor
 
         cd_frame = confirm(cand, corpus_toks).select("doc_id").distinct()
         with ThreadPoolExecutor(max_workers=2) as pool:
-            f_cd = pool.submit(cd_frame.localCheckpoint)
-            f_er = pool.submit(edges_raw.localCheckpoint)
+            f_cd = pool.submit(pins.checkpoint, cd_frame)
+            f_er = pool.submit(pins.checkpoint, edges_raw)
             corpus_dropped = f_cd.result()
             edges_raw = f_er.result()
         # id-only join of two materialized checkpoints — cheap to
@@ -855,10 +830,10 @@ def incremental_minhash_neardup(
     )
     # every heavy reuse is materialized (corpus_dropped/edges are
     # checkpointed; the greedy join path checkpoints its own output) —
-    # release the within-call persists; the final anti join re-derives
+    # release the within-call band table; the final anti join re-derives
     # new_toks once from lineage. The anti join ignores duplicate dup_ids
     # rows, so no distinct is needed in the corpus-empty branch.
-    _release_all()
+    pins.release(new_banded)
     return new_toks.join(dup_ids, "doc_id", "left_anti")
 
 
@@ -890,13 +865,10 @@ def _greedy_component_drops(
       correct but pays one bounded shuffle round per greedy wavefront
       step (inherent: lex-first MIS is P-complete).
 
-    Checkpoint hygiene for per-batch ingestion loops: the CC call runs
-    with ``release_checkpoint=True`` so its converged edge set is released
-    immediately; what stays pinned per exact-mode call is a handful of
-    ID-ONLY tables (confirmed edges, corpus-dropped ids, the (node,
-    cluster) map) until GC — bounded by dup counts, never by batch or
-    corpus text volume (regression-tested in
-    test_dedup.py::test_exact_mode_bounds_pinned_checkpoints)."""
+    An exact-mode call leaves a handful of ID-ONLY pins (edges,
+    corpus-dropped ids, converged CC edges, the joins drop set) to the
+    caller's ``pins.scope()`` — bounded by dup counts, never by text
+    volume (test_dedup.py::test_exact_mode_bounds_pinned_checkpoints)."""
     import pandas as pd
 
     from pyspark.sql.types import StructField, StructType
@@ -935,8 +907,8 @@ def _greedy_component_drops(
     # in the same memory envelope the per-component path already accepts
     # for a single cap-sized component — and the CC loop + size routing
     # (~15-20 driver-scheduled jobs at sandbox scale) vanishes. The
-    # caller hands the edges in as an eager localCheckpoint, so the
-    # count probe is one cheap job.
+    # caller hands the edges in as an eager localCheckpoint or an id-only
+    # join of two of them, so the count probe is one cheap job.
     n_edges = edges.count()
     if n_edges == 0:
         return edges.sparkSession.createDataFrame(
@@ -955,9 +927,7 @@ def _greedy_component_drops(
                 schema=StructType([StructField("doc_id", id_type)]),
             )
         )
-    comp = connected_components(
-        edges, src="doc_id", dst="other_id", release_checkpoint=True
-    )
+    comp = connected_components(edges, src="doc_id", dst="other_id")
     ec = edges.join(
         comp.select(F.col("url").alias("doc_id"), "cluster_id"), "doc_id"
     ).select(
@@ -1007,27 +977,22 @@ def _greedy_drops_joins(edges: DataFrame) -> DataFrame:
     isEmpty probe per round, and at sandbox scale the loop's wall is
     driver-round latency, not data). The previous round's pin is released
     after the new one materializes, so lineage, storage, and job count
-    stay flat however many rounds run; on exit the drop set is eagerly
-    checkpointed (one tiny id-only job) and the final state + input edges
-    are RELEASED — per-batch ingestion loops accumulate only the returned
-    id-only frame per call (regression-tested in
+    stay flat however many rounds run; only the returned id-only drop
+    set stays pinned (regression-tested in
     test_exact_mode_bounds_pinned_checkpoints, joins path included).
     """
     from pyspark.sql.types import StructField, StructType
 
-    from soweego_spark.operators.cluster import _unpersist_checkpoint
-
     edges = edges.select("a", "b")
     # lazy checkpoint + count = ONE job that both pins the edges and
     # returns the edge count (replaces isEmpty probe + eager checkpoint)
-    edges = edges.localCheckpoint(eager=False)
+    edges = pins.checkpoint(edges, eager=False)
     n_edges = edges.count()
     if n_edges == 0:
         # common hybrid case: no over-cap components — release the pin
-        # the count created and return a fresh empty typed frame (never a
-        # frame derived from an unpersisted checkpoint: recomputing one
-        # throws once its blocks are gone)
-        _unpersist_checkpoint(edges)
+        # and return a fresh empty frame (never one derived from a
+        # released checkpoint)
+        pins.release(edges)
         return edges.sparkSession.createDataFrame(
             [], StructType([StructField("doc_id", edges.schema["a"].dataType)])
         )
@@ -1062,26 +1027,25 @@ def _greedy_drops_joins(edges: DataFrame) -> DataFrame:
             .join(decided.withColumnRenamed("v", "b"), "b", "left_anti")
             .select("a", "b")
         )
-        state = (
+        state = pins.checkpoint(
             nxt.unionByName(
                 state.filter(F.col("b").isNull()).select("a", "b")
-            )
-            .unionByName(dropped.select(F.col("v").alias("a"), null_b))
-            .localCheckpoint(eager=False)
+            ).unionByName(dropped.select(F.col("v").alias("a"), null_b)),
+            eager=False,
         )
         # the round's single job: materializes the new state's checkpoint
         # AND returns the remaining-edge count that decides termination
         n_edges = state.filter(F.col("b").isNotNull()).count()
-        _unpersist_checkpoint(prev)
+        pins.release(prev)
         prev = state
     # loop exits with 0 edges left: the state is exactly the NULL-marked
-    # drop set. Pin it as its own tiny id-only checkpoint and release the
-    # final round's state (the loop already released the input edges and
-    # every intermediate round when the following round materialized).
-    out = state.filter(F.col("b").isNull()).select(
-        F.col("a").alias("doc_id")
-    ).distinct().localCheckpoint()
-    _unpersist_checkpoint(state)
+    # drop set; pin it as its own tiny checkpoint, release the last state
+    out = pins.checkpoint(
+        state.filter(F.col("b").isNull()).select(
+            F.col("a").alias("doc_id")
+        ).distinct()
+    )
+    pins.release(state)
     # diagnostics only (scripts/greedy_scale_proof.py reads it): rounds
     # == longest greedy dependency chain in the input
     global LAST_JOINS_ROUNDS

@@ -4,9 +4,9 @@ Gopher-style quality rules (Rae et al. 2021, "Scaling Language Models:
 Methods, Analysis & Insights from Training Gopher", appendix A1.1 — the
 publicly documented repetition filters used by most LLM data pipelines):
 word counts, mean word length, distinct-word ratio, top-bigram fraction.
-Everything is relational — tokens/bigrams explode to rows, aggregate with
-map-side combine, join back — so the metrics scale exactly like any other
-aggregation (NO per-doc Python, no driver work, no unbounded state).
+Every metric, the bigram mode included, is a Catalyst array expression
+over the document's own token array — one narrow projection with no
+exchange, NO per-doc Python, no driver work, no unbounded state.
 
 ``scrub_pii`` is the redaction pass training pipelines run before
 tokenization: email / phone / IPv4 patterns replaced by typed tags, all
@@ -42,10 +42,10 @@ def gopher_quality(
     """Per-document repetition metrics + the pass/fail verdict.
 
     Output: ``(id, word_count, mean_word_len, distinct_ratio,
-    top_bigram_frac, quality_pass)``. The bigram mode is computed
-    relationally (explode -> count -> max per doc): at 10^12 documents
-    that is two map-side-combinable aggregations sharded by (doc, gram)
-    and doc — never a per-document Python loop or a collected vocabulary.
+    top_bigram_frac, quality_pass)``. The bigram mode is computed inside
+    the row (sort the bigram array, fold for the longest equal run): work
+    per document is bounded by its own word count, with no shuffle, no
+    per-document Python loop and no collected vocabulary.
     """
     toks = docs.select(
         F.col(id_col).alias("id"), _tokens(F.col(text_col)).alias("w")

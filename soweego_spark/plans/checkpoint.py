@@ -21,6 +21,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from soweego_spark import pins
+
 MANIFEST_NAME = "_stage_manifest.json"
 
 
@@ -228,7 +230,10 @@ class StageCheckpointer:
         cached = self.load(name, h)
         if cached is not None:
             return cached
-        return self.save(name, compute(), h)
+        # every frame the stage pins dies once its parquet is written and
+        # read back — the returned frame no longer depends on them
+        with pins.scope():
+            return self.save(name, compute(), h)
 
     def manifest(self, stage: str) -> dict | None:
         _, mf = self._paths(stage)

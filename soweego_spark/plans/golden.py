@@ -615,7 +615,7 @@ def link_golden(
     # materialize the (tiny, threshold-filtered) prediction set so the
     # goal-set wd/tgt caches can be released here instead of leaking into
     # the caller's session (ADVICE round-6); callers may release the
-    # returned checkpoint with cluster._unpersist_checkpoint once consumed
+    # returned checkpoint with pins.release once consumed
     preds = preds.localCheckpoint()
     wd.unpersist()
     tgt.unpersist()

@@ -15,6 +15,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from soweego_spark import pins
 from soweego_spark.operators import blocking as blk
 from soweego_spark.operators import classify as clf
 from soweego_spark.operators import pairfeatures as pf
@@ -118,8 +119,9 @@ def run_pipeline(
     # eager `.count()` barrier measured consistently SLOWER in fresh-JVM
     # interleaved A/Bs (eager 32s stable vs lazy ~28s mean at 2000
     # entities). On a real cluster with a persisted signatures stage
-    # (checkpointer) the question disappears.
-    sig.cache()
+    # (checkpointer) the question disappears. This and the two pins below
+    # stay in the caller's scope: PipelineResult's frames depend on them.
+    pins.persist(sig)
 
     pairs = stage(
         "pairs",
@@ -148,7 +150,7 @@ def run_pipeline(
             carry_rule_cols=True,
         ),
     )
-    features.cache()
+    pins.persist(features)
 
     # Train on the driver over the labeled pairs' feature rows.
     X, y = clf.collect_training_matrix(features, labeled_pairs)
@@ -166,7 +168,7 @@ def run_pipeline(
         extra={"model_w": [float(w) for w in model.weights], "model_b": model.bias},
     )
     # matches is consumed by clustering AND the metrics joins.
-    matches.cache()
+    pins.persist(matches)
 
     clusters = stage(
         "clusters",

@@ -48,6 +48,12 @@ from soweego_spark.functions.urls import (
 
 # ---------------------------------------------------------------- shared
 
+# a private nondeterministic copy of the shared URL kernel (see
+# musicbrainz_link_tables)
+_clean_and_validate_nd = F.pandas_udf(
+    clean_and_validate.func, clean_and_validate.returnType
+).asNondeterministic()
+
 # Wikidata QIDs for IMDb professions (public vocabulary; reference
 # wikidata/vocabulary.py:267-305). Keys are IMDb's profession slugs.
 IMDB_PROFESSIONS_MAPPING = {
@@ -330,18 +336,9 @@ def discogs_master_tables(masters: DataFrame) -> dict[str, DataFrame]:
 # ------------------------------------------------------------------ IMDb
 
 
-def imdb_person_tables(
-    people: DataFrame, cache_base: bool = False
-) -> dict[str, DataFrame]:
+def imdb_person_tables(people: DataFrame) -> dict[str, DataFrame]:
     """IMDb name-basics rows -> five per-profession person tables + the
     person-movie relationship edges.
-
-    ``cache_base=True`` persists the parsed base frame so the six output
-    tables filter ONE parse instead of re-running the scan + profession/
-    QID/date derivation per table (r7; callers that consume the tables
-    in one session, e.g. the whole-flavor gate union, opt in — the
-    default stays uncached so long-lived jobs control their own cache
-    lifecycle).
 
     Input columns (the TSV reader already turns ``\\N`` into NULL):
     nconst, primaryName, birthYear, deathYear, primaryProfession,
@@ -402,8 +399,6 @@ def imdb_person_tables(
         .withColumn("_born", year_date("birthYear"))
         .withColumn("_died", year_date("deathYear"))
     )
-    if cache_base:
-        base = base.persist()
 
     misc_only = (F.size("_profs") == 1) & (
         F.element_at("_profs", 1) == "miscellaneous"
@@ -598,11 +593,12 @@ def musicbrainz_link_tables(
     # (75x the needed rows in the gate fixture). The kernel is pure, so
     # results are unchanged; only the optimizer's licence to copy the
     # expression is revoked (plan: 2 ArrowEvalPython per branch -> 1).
+    # A private instance: asNondeterministic() mutates the UDF it is
+    # called on, and the shared one must stay deterministic for every
+    # other caller (_link_table).
     first_valid = url.select(
         F.col("id").alias("url_id"),
-        F.element_at(
-            clean_and_validate.asNondeterministic()(F.col("url")), 1
-        ).alias("_url"),
+        F.element_at(_clean_and_validate_nd(F.col("url")), 1).alias("_url"),
     ).filter(F.col("_url").isNotNull())
     linked = (
         one_entity.join(first_valid, "url_id")

@@ -282,3 +282,28 @@ def test_musicbrainz_link_tables_semantics(spark):
     b_links = t["band_links"].collect()
     assert len(b_links) == 1 and b_links[0]["catalog_id"] == "g-bbb"
     assert b_links[0]["is_wiki"] is False
+
+
+def test_musicbrainz_links_leave_shared_udf_deterministic(spark):
+    """musicbrainz_link_tables needs a nondeterministic URL kernel; it must
+    not get one by mutating the shared UDF, which every other caller
+    (e.g. _link_table) relies on staying deterministic."""
+    from soweego_spark.functions.urls import clean_and_validate
+
+    artist = spark.createDataFrame(
+        [("1", "g-aaa", "1")], "id string, gid string, type_id string"
+    )
+    l_artist_url = spark.createDataFrame(
+        [("1", "u1")], "entity_id string, url_id string"
+    )
+    url = spark.createDataFrame(
+        [("u1", "https://en.wikipedia.org/wiki/Nina_Simone")],
+        "id string, url string",
+    )
+    t = cat.musicbrainz_link_tables(artist, l_artist_url, url)
+    assert len(t["artist_links"].collect()) == 1
+    # the wrapper's own attribute is a copy taken at creation; the UDF
+    # object behind it is what plans are built from
+    assert clean_and_validate._unwrapped.deterministic is True
+    links = cat._link_table(url, "id", "url")
+    assert links._jdf.queryExecution().analyzed().deterministic()

@@ -122,9 +122,7 @@ def test_cc_loop_one_action_per_iteration(spark):
         group = f"cc-jobs-{label}"
         sc.setJobGroup(group, "job-count probe")
         try:
-            out = connected_components(
-                edges, release_checkpoint=True, single_task_edges=0
-            )
+            out = connected_components(edges, single_task_edges=0)
             assert out.select("cluster_id").distinct().count() == 1
         finally:
             sc.setJobGroup(None, None)
